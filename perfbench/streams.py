@@ -1,14 +1,15 @@
 """Streaming workloads over the file source (the Kafka connector is not
 bundled; the file source is the engine's stand-in for it).
 
-A run first drains a two-file warm-up backlog, so that the pipeline's
-plans are compiled as in a stream that has been running, then measures
+A run first drains a warm-up backlog as large as the measured one
+`WARMUP_DRAINS` times, so that the pipeline's plans are compiled and its
+hot paths JIT-compiled as in a stream that has been running, then measures
 two phases, each query with its own input directory, checkpoint and
 outputs:
 
 1. drain: a staged backlog is processed with `available_now=True`,
-   `DRAINS` times; the median wall time is `lap_s` and the backlog's rows
-   per second of it `drain_rows_s`;
+   `DRAINS` times; the fastest drain's wall time is `lap_s` and the
+   backlog's rows per second of it `drain_rows_s`;
 2. open loop: the pipeline runs with its default trigger while a seeded
    generator drops files at a fixed rate for `--seconds`; latency is
    joined per file from the checkpoint (scheduled drop -> batch commit).
@@ -51,8 +52,12 @@ from streamprocessing_with_kafka_spark.streaming.stateful import dedup_within_wa
 
 ENRICHED_COLS = ["order_id", "product_name", "quantity", "price", "order_date", "total_price"]
 
-#: backlog drains per run; the median drain is reported
-DRAINS = 5
+#: backlog drains per run; the fastest is reported, because drain times
+#: still fall from one drain to the next (the JIT keeps compiling) and
+#: other guests' CPU time only ever adds to a drain
+DRAINS = 4
+#: untimed drains of a backlog of the same size before any measurement
+WARMUP_DRAINS = 2
 #: longest a streaming query may take to finish its input
 QUERY_TIMEOUT_S = 60
 
@@ -215,10 +220,12 @@ def check(ctx, phase: Phase, upsert: bool) -> int:
 
 def _stream(ctx, workload: str, kind: str) -> orderstream.StreamData:
     """The seeded input of one phase: `live` files for the open loop, a
-    `backlog` to drain, or a two-file `warmup` backlog."""
+    `backlog` to drain, or a `warmup` backlog of the same size."""
     p = PARAMS[workload]
     if kind == "warmup":
-        return orderstream.generate(ctx.seed + 2, 2, p["rows_per_file"], prefix=kind, **p["shape"])
+        return orderstream.generate(
+            ctx.seed + 2, p["backlog_files"], p["backlog_rows"], prefix=kind, **p["shape"]
+        )
     if kind == "live":
         n = max(int(round(p["files_per_s"] * ctx.seconds)), min_samples(0.95))
         return orderstream.generate(
@@ -238,11 +245,13 @@ def run(ctx, upsert: bool) -> None:
         transform_orders(file_order_stream(spark, ctx.path("register"))).schema
 
     spark = timed_setups(ctx, register)
-    # compile the pipeline's plans before measuring: a long-running
-    # stream pays that once, not per batch
-    warm = Phase(ctx, "warmup", _stream(ctx, workload, "warmup"))
-    drain(ctx, spark, warm, upsert, TreeMeter())
-    check(ctx, warm, upsert)
+    # compile the pipeline's plans and warm the JIT before measuring: a
+    # long-running stream pays that once, not per batch
+    warmup = _stream(ctx, workload, "warmup")
+    for i in range(WARMUP_DRAINS):
+        warm = Phase(ctx, f"warmup-{i}", warmup)
+        drain(ctx, spark, warm, upsert, TreeMeter())
+        check(ctx, warm, upsert)
     if ctx.trace:
         _traced(ctx, spark, workload, upsert)
         return
@@ -251,7 +260,8 @@ def run(ctx, upsert: bool) -> None:
     drains = [Phase(ctx, f"drain-{i}", backlog) for i in range(DRAINS)]
     meter = TreeMeter()
     meter.start_sampling()
-    wall = statistics.median(drain(ctx, spark, ph, upsert, meter) for ph in drains)
+    walls = [drain(ctx, spark, ph, upsert, meter) for ph in drains]
+    wall = min(walls)
     lat, _ = open_loop(ctx, spark, live, upsert, p["files_per_s"], meter)
     meter.stop_sampling()
     for ph in drains + [live]:
@@ -267,7 +277,12 @@ def run(ctx, upsert: bool) -> None:
     )
     ctx.notes["peak_rss_mb"] = round(meter.peak_rss / 2**20, 1)
     ctx.notes.update(
-        {"latency_samples": len(lat), "open_files": len(live.data.files), "drain_rows": backlog.rows}
+        {
+            "drains_s": [round(w, 3) for w in walls],
+            "latency_samples": len(lat),
+            "open_files": len(live.data.files),
+            "drain_rows": backlog.rows,
+        }
     )
 
 
@@ -298,9 +313,9 @@ def _median(xs) -> float:
 
 def _traced(ctx, spark, workload: str, upsert: bool) -> None:
     """The open loop with a progress listener attached, then `DRAINS`
-    drains of one backlog, alternately untraced and traced (the listener
-    attached); the tracing overhead is the median traced drain minus the
-    median untraced one. For stream_orders, the drain once more at
+    drains of one backlog, untraced and traced (the listener attached) in
+    turn; the tracing overhead is the median traced drain minus the median
+    untraced one. For stream_orders, the drain once more at
     local[1]."""
     p = PARAMS[workload]
     L = ctx.layers
@@ -316,7 +331,9 @@ def _traced(ctx, spark, workload: str, upsert: bool) -> None:
     walls: dict[bool, list[float]] = {False: [], True: []}
     traced_ids = []
     for i in range(DRAINS):
-        traced = i % 2 == 1
+        # untraced, traced, traced, untraced: drain times still fall from
+        # one drain to the next, and this order cancels a steady fall
+        traced = i % 4 in (1, 2)
         ph = Phase(ctx, f"drain-{i}", backlog)
         if traced:
             spark.streams.addListener(log)
