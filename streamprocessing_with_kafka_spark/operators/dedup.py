@@ -165,17 +165,12 @@ _SHINGLES_SQL = word_ngrams_sql(SHINGLE_N, alias="shingle")
 # ------------------------------------------------- n-gram Jaccard pairs
 
 
-def _shingles_with_count(
-    spark: SparkSession, sf_dir: str, materialize: bool = True
-) -> DataFrame:
+def _shingles_with_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, _h, n): the doc's shingles as 60-bit hashes plus its
     shingle-set size n, attached by a window so downstream joins carry
     it along instead of re-deriving it through separate broadcast
     branches. Materialized ONCE PER INVOCATION via an eager
-    localCheckpoint; materialize=False skips the barrier for plans that
-    consume the frame exactly once (A/B'd at sf0.1: even the single-
-    consumer fused pair search ran faster WITH the barrier, 1.61 vs
-    1.83 s, so every current caller keeps the default).
+    localCheckpoint.
 
     The shingle STRING never leaves this function: every consumer (pair
     blocking, signature mins, intersection counting) operates on the
@@ -207,7 +202,7 @@ def _shingles_with_count(
         .select("doc_id", md5_long(F.col("shingle")).alias("_h"))
         .withColumn("n", F.count(F.lit(1)).over(W.partitionBy("doc_id")))
     )
-    return ephemeral_local_checkpoint(sh) if materialize else sh
+    return ephemeral_local_checkpoint(sh)
 
 
 def _group_pair_explode(

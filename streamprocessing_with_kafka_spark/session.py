@@ -36,10 +36,11 @@ _RUNTIME_CONFS = {
     # Memory headroom assumption: this is SESSION-GLOBAL, so every join
     # may build a hash relation from a 64 MB serialized side -- which can
     # deserialize to several hundred MB in-heap, multiplied by concurrent
-    # joins. Sized for executors/drivers with >= 8-16 GB heap (the local
-    # 16g default and any cluster sized for real work); on smaller heaps,
-    # scope the raise per-query (spark.conf.set around the graph query)
-    # or drop back to Spark's 10 MB default.
+    # joins. Sized for executors/drivers with >= 8-16 GB heap (any
+    # cluster sized for real work; the local default heap reaches that on
+    # hosts with 32 GB or more); on smaller heaps, scope the raise
+    # per-query (spark.conf.set around the graph query) or drop back to
+    # Spark's 10 MB default.
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "64MB",
     # Spark still defaults parquet timestamps to legacy INT96, which gets
     # NO min/max statistics -- every time-range predicate on a lake we
@@ -59,17 +60,27 @@ def ensure_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def _default_heap() -> str:
+    """A quarter of physical memory, between 1g and 16g. The rest stays
+    free for the Python workers, the page cache and the host's other
+    processes. The cap: an oversized heap (90g tested) gives G1 a huge
+    young gen and multi-second stop-the-world pauses that dominate
+    sub-second queries, while 16g covers the bench working set and keeps
+    pauses in the tens of ms."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, min(16, phys // 4 // 2**30))}g"
+
+
 def get_spark(app_name: str = "streamprocessing-spark-engine") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    """The engine's session: one local core per CPU this process may run
+    on and `_default_heap()`, unless `SPARK_GRAFT_CPUS` / `SPARK_DRIVER_MEM`
+    set them."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", cpus)
-        # NOT sized to the machine: an oversized heap (90g tested) gives G1
-        # a huge young gen and multi-second stop-the-world pauses that
-        # dominate sub-second queries; 16g covers the bench working set
-        # with room to spare and keeps pauses in the tens of ms.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", _default_heap()))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
     )

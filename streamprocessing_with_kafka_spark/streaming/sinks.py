@@ -22,6 +22,7 @@ Two interchangeable foreachBatch bodies:
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -52,6 +53,7 @@ def parquet_upsert_sink(spark: SparkSession, state_dir: str, key: str):
         out.write.mode("overwrite").parquet(tmp)
         final = spark.read.parquet(tmp)
         final.write.mode("overwrite").parquet(data_path)
+        shutil.rmtree(tmp)
 
     return write_batch
 

@@ -3,9 +3,14 @@ parquet out, exactly the reference's §3.2 processing path, plus the
 idempotent K2 upsert sink."""
 
 import json
+from collections import Counter
 
+import pytest
+from pyspark.errors import StreamingQueryException
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
+from streamprocessing_with_kafka_spark.streaming import pipeline
 from streamprocessing_with_kafka_spark.streaming.pipeline import start_file_pipeline
 from streamprocessing_with_kafka_spark.streaming.sinks import parquet_upsert_sink
 
@@ -91,6 +96,7 @@ def test_upsert_sink_idempotent_with_tombstones(spark, tmp_path):
     rows = {r["order_id"]: r["total_price"]
             for r in spark.read.parquet(f"{state}/data").collect()}
     assert rows == {"1": 11.0, "3": 30.0}  # 2 tombstoned away
+    assert not list((tmp_path / "state").glob("tmp_*"))  # staging removed
 
 
 def test_degenerate_batches_route_to_dead_letter(spark, tmp_path):
@@ -122,3 +128,103 @@ def test_degenerate_batches_route_to_dead_letter(spark, tmp_path):
     assert len(invalid) == 2
     assert all(r["status_message"].startswith("Missing required fields")
                for r in invalid)
+
+
+def _order(i, valid=True):
+    return {"order_id": str(i), "product_name": f"p{i}",
+            "quantity": "2" if valid else "-1", "price": "10",
+            "order_date": "2024-01-01"}
+
+
+def _branches(spark, out):
+    """Each branch's rows with their multiplicity."""
+    return {
+        b: Counter(tuple(r) for r in spark.read.parquet(str(out / b)).collect())
+        for b in ("enriched_orders", "invalid_orders")
+    }
+
+
+def _fail_once_after(fn, n=1):
+    """`fn` whose `n`-th call completes and then raises."""
+    calls = []
+
+    def wrapper(*args, **kwargs):
+        result = fn(*args, **kwargs)
+        calls.append(1)
+        if len(calls) == n:
+            raise RuntimeError("injected fault")
+        return result
+
+    return wrapper
+
+
+def _assert_replay_matches_crash_free(spark, tmp_path, inject):
+    """Runs the same input crash-free, then with `inject()` applied: the
+    first attempt at the batch must fail, and a restart from the same
+    checkpoint must leave both branches equal to the crash-free run."""
+    inp = tmp_path / "in"
+    inp.mkdir()
+    # two files -> two write tasks, so each branch publishes several files
+    _write_orders(inp / "a.json", [_order(i, i % 3 != 0) for i in range(20)])
+    _write_orders(inp / "b.json", [_order(i, i % 4 != 0) for i in range(20, 40)])
+    start_file_pipeline(
+        spark, str(inp), str(tmp_path / "clean"), str(tmp_path / "ckpt_clean")
+    ).awaitTermination(120)
+
+    inject()
+    out, ckpt = tmp_path / "out", tmp_path / "ckpt"
+    with pytest.raises(StreamingQueryException, match="injected fault"):
+        start_file_pipeline(spark, str(inp), str(out), str(ckpt)).awaitTermination(120)
+    q = start_file_pipeline(spark, str(inp), str(out), str(ckpt))
+    q.awaitTermination(120)
+    assert q.exception() is None
+    want = _branches(spark, tmp_path / "clean")
+    assert sum(want["enriched_orders"].values()) == 28
+    assert sum(want["invalid_orders"].values()) == 12
+    assert _branches(spark, out) == want
+
+
+def test_split_replay_after_first_write_fails(spark, tmp_path, monkeypatch):
+    """The batch's first parquet write completes, then the batch fails;
+    the replayed batch adds no duplicate and loses no row."""
+
+    def inject():
+        monkeypatch.setattr(
+            DataFrameWriter, "parquet", _fail_once_after(DataFrameWriter.parquet)
+        )
+
+    _assert_replay_matches_crash_free(spark, tmp_path, inject)
+
+
+@pytest.mark.parametrize("published", [1, 2])
+def test_split_replay_after_publish(spark, tmp_path, monkeypatch, published):
+    """The batch fails after publishing one branch (partway through the
+    publish) or both (before its commit): the replay replaces the files
+    already published and publishes the rest."""
+
+    def inject():
+        monkeypatch.setattr(
+            pipeline,
+            "publish_branch",
+            _fail_once_after(pipeline.publish_branch, published),
+        )
+
+    _assert_replay_matches_crash_free(spark, tmp_path, inject)
+
+
+def test_all_valid_input_leaves_empty_invalid_branch_readable(spark, tmp_path):
+    """A branch that never got a row still reads as 0 rows with the
+    branch's columns, and later batches do not add more empty files."""
+    inp, out, ckpt = tmp_path / "in", tmp_path / "out", tmp_path / "ckpt"
+    inp.mkdir()
+    _write_orders(inp / "a.json", [_order(1), _order(2)])
+    start_file_pipeline(spark, str(inp), str(out), str(ckpt)).awaitTermination(120)
+    _write_orders(inp / "b.json", [_order(3)])
+    start_file_pipeline(spark, str(inp), str(out), str(ckpt)).awaitTermination(120)
+
+    enriched = spark.read.parquet(str(out / "enriched_orders"))
+    invalid = spark.read.parquet(str(out / "invalid_orders"))
+    assert enriched.count() == 3
+    assert invalid.count() == 0
+    assert invalid.schema == enriched.schema
+    assert len(list((out / "invalid_orders").glob("*.parquet"))) == 1
